@@ -1,4 +1,4 @@
-"""Turns the driver JVM's raw record into the benchmark's metrics.
+"""Turns the benchmark JVM's raw record into the benchmark's metrics.
 
 End-to-end metrics (untraced runs) are the same four for every workload,
 each defined on the workload's own unit of work:

@@ -4,9 +4,9 @@
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
 Run it from the root of a checkout. The first run builds the engine and
-the driver with sbt (perfbench/build.sbt); later runs reuse the build while
+the benchmark program with sbt (perfbench/build.sbt); later runs reuse the build while
 the sources are unchanged. Each run generates its inputs from the seed
-under .bench_build/, starts the driver JVM (perfbench.Main), checks the
+under .bench_build/, starts the benchmark JVM (perfbench.Main), checks the
 outputs, and prints one JSON object as the last line of standard output:
 end-to-end metrics untraced (--trace 0), per-layer metrics traced
 (--trace 1). See perfbench/README.md for the workloads and metrics.
@@ -35,7 +35,7 @@ import oracle  # noqa: E402
 WORKLOADS = ("ffi_export", "lake_dml", "query_suite")
 BUILD_TIMEOUT_S = 700  # with RUN_TIMEOUT_S, a first run ends within 900 s
 RUN_TIMEOUT_S = 170
-# The engine's own JVM options pin an 8 GB heap; the driver caps it at 4 GB
+# The engine's own JVM options pin an 8 GB heap; the benchmark caps it at 4 GB
 # to stay small on a shared machine (later options win).
 HEAP = "4g"
 
@@ -60,7 +60,7 @@ def source_key(root):
 
 
 def build(root, deadline):
-    """Compiles engine and driver; returns (classpath, jvm options)."""
+    """Compiles engine and benchmark; returns (classpath, jvm options)."""
     launch = os.path.join(HERE, "target", "launch.txt")
     key_file = os.path.join(HERE, "target", "launch.key")
     key = source_key(root)
@@ -73,7 +73,7 @@ def build(root, deadline):
             env["SBT_OPTS"] = (f"-Dsbt.override.build.repos=true -Dsbt.repository.config={repos} "
                                "-Dsbt.offline=true -Xmx2g")
         env.setdefault("COURSIER_MODE", "offline")
-        log("building engine and driver with sbt")
+        log("building engine and benchmark with sbt")
         code = run_child(["sbt", "--batch", "-Dsbt.log.noformat=true", "-Dsbt.server.autostart=false",
                           "launch"], HERE, env, deadline, sys.stderr)
         if code != 0:
@@ -144,12 +144,12 @@ def main(argv):
                                   f"-Dderby.stream.error.file={os.path.join(work, 'derby.log')}",
                                   "-cp", cp, "perfbench.Main", args.workload, inputs, work,
                                   str(args.seconds), args.trace, record_file])
-    with open(os.path.join(run_dir, "driver.log"), "w") as out:
+    with open(os.path.join(run_dir, "jvm.log"), "w") as out:
         code = run_child(cmd, root, dict(os.environ), run_started + RUN_TIMEOUT_S, out)
     if code != 0:
-        with open(os.path.join(run_dir, "driver.log")) as f:
+        with open(os.path.join(run_dir, "jvm.log")) as f:
             sys.stderr.write(f.read()[-4000:])
-        log(f"driver JVM exited with {code}")
+        log(f"benchmark JVM exited with {code}")
         return 1
     jvm_done = time.monotonic()
     with open(record_file) as f:
@@ -161,7 +161,7 @@ def main(argv):
     except ValueError as e:
         log(str(e))
         return 1
-    detail["harness_s"] = {"generate": generated - run_started, "driver_jvm": jvm_done - generated,
+    detail["harness_s"] = {"generate": generated - run_started, "benchmark_jvm": jvm_done - generated,
                            "check": time.monotonic() - jvm_done}
     print(json.dumps({"detail": detail}, sort_keys=True))
     print(json.dumps(result, sort_keys=True))

@@ -23,7 +23,7 @@ trait Workload {
   def layers(probe: Probe, tracer: Tracer, ops: Ops): Map[String, Double]
 }
 
-/** The benchmark's driver JVM. `perfbench/run.py` generates the inputs,
+/** The benchmark's JVM. `perfbench/run.py` generates the inputs,
   * starts this main, and turns the raw record it writes into metrics.
   *
   * Usage: perfbench.Main <workload> <inputDir> <workDir> <seconds> <trace 0|1> <out.json>
@@ -129,7 +129,7 @@ object Main {
   }
 }
 
-/** Minimal JSON for the driver's record (Jackson from the Spark classpath). */
+/** Minimal JSON for the benchmark's record (Jackson from the Spark classpath). */
 object Json {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

@@ -6,17 +6,18 @@ o_totalprice). The plan is a sequence of cycles; each cycle holds the same
 op mix in a seeded order, so a short run sees the same proportions as a
 long one:
 
-  merge x2   SQL MERGE of a fresh batch: updates of existing keys (skewed
+  merge      SQL MERGE of a fresh batch: updates of existing keys (skewed
              towards recent keys) plus inserts of new keys
   insert     SQL INSERT of a batch of new keys
   update     SQL UPDATE of a 200-key range (recent keys favoured)
   delete     SQL DELETE of a 200-key range (recent keys favoured)
-  point x10  point read of one key
-  range x10  range read of an 800-key range
+  point x20  point read of one key
+  range x20  range read of an 800-key range
 
 Every cycle ends with `CALL ... optimize`. Reads outnumber commits more
-than three to one, so the median op is a read and sits inside the read
-distribution rather than at its edge.
+than seven to one, so the median op is a read and sits inside the read
+distribution rather than at its edge; a run measures about one cycle, and
+forty reads make its median steady.
 Set-up runs one op of each kind (WARMUP) on the same table first. Each batch carries its
 plain-parquet size (pyarrow, default options), the denominator of the
 write-amplification metric.
@@ -29,7 +30,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-CYCLE = ["merge", "merge", "insert", "update", "delete"] + ["point"] * 10 + ["range"] * 10
+CYCLE = ["merge", "insert", "update", "delete"] + ["point"] * 20 + ["range"] * 20
 WARMUP = ["merge", "insert", "update", "delete", "point", "range"]
 STATUSES = ["F", "O", "P", "M", "N"]
 

@@ -7,28 +7,24 @@ each defined on the workload's own unit of work:
              the first timed op
   work_s     one unit of work: a whole FFI batch (median over batches),
              one cycle of the lake op plan (sum of per-kind medians times
-             the kind's count per cycle), one pass of the query subset
-             (sum of per-query medians)
+             the kind's count per cycle)
   op_p50_s   median latency of one op: an export load, a lake DML or read
-             statement, a query call
+             statement
   ops_per_s  successful ops per second the client spent in ops
 
 Failed ops are never samples; they are counted in `failed`. Each
 workload's own figures (commit and read latencies with their tail
-percentile, write and space amplification, MB/s, rows/s, suite time) go on
+percentile, write and space amplification, MB/s, rows/s) go on
 the detail line printed before the result.
 """
 
 import math
 import statistics
 
-# The workloads BENCHMARK.json lists. `query_suite` runs on demand only: a
-# run costs ~65 s (set-up alone ~30 s), and the three workloads' runs
-# together would not fit the benchmark's time budget.
+# The workloads BENCHMARK.json lists.
 DRIVEN = ("ffi_export", "lake_dml")
 
 LAKE_SF = 0.1
-QUERY_SF = 0.1
 
 END_TO_END = [
     # name, unit, better
@@ -38,7 +34,7 @@ END_TO_END = [
     ("ops_per_s", "1/s", "higher"),
 ]
 
-LAKE_CYCLE = {"merge": 2, "insert": 1, "update": 1, "delete": 1, "point": 10, "range": 10,
+LAKE_CYCLE = {"merge": 1, "insert": 1, "update": 1, "delete": 1, "point": 20, "range": 20,
               "optimize": 1}
 COMMITS = ("merge", "insert", "update", "delete", "optimize")
 READS = ("point", "range")
@@ -67,6 +63,18 @@ PER_LAYER = (
     + [("functions.codegen_compile_ms", "ms", "lower"),
        ("functions.codegen_max_method_bytes", "bytes", "lower"),
        ("trace.overhead_s", "s", "lower")])
+
+# The per-layer metrics a traced run of each workload must measure: the
+# layers it exercises, plus those every workload exercises. A run that does
+# not measure one of them fails; the others (a layer the workload does not
+# exercise) read 0.
+COMMON_LAYERS = ("engine.", "plans.", "queries.", "functions.", "trace.")
+WORKLOAD_LAYERS = {"ffi_export": ("etl.", "sinks."), "lake_dml": ("sources.",)}
+
+
+def exercised(workload):
+    prefixes = COMMON_LAYERS + WORKLOAD_LAYERS[workload]
+    return [n for n, _, _ in PER_LAYER if n.startswith(prefixes)]
 
 
 def tail(samples):
@@ -102,8 +110,12 @@ def work_seconds(record):
     if name == "ffi_export":
         exports = [o for o in ops if o["sec"] is not None]
         secs = sum(o["sec"] for o in exports)
-        detail = {"ffi.batch_s": statistics.median(final["batch_s"]) if final["batch_s"] else None,
-                  "ffi.batches": len(final["batch_s"]),
+        batches = {}
+        for o in ops:
+            batches.setdefault(o["batch"], []).append(o["sec"])
+        whole = [sum(b) for b in batches.values() if None not in b]  # no export failed
+        detail = {"ffi.batch_s": statistics.median(whole) if whole else None,
+                  "ffi.batches": len(whole),
                   "ffi.export_p50_s": statistics.median(ok_secs(ops)),
                   "ffi.xml_mb_per_s": sum(o["bytes"] for o in exports) / 1e6 / secs,
                   "ffi.rows_per_s": sum(o["rows"] for o in exports) / secs}
@@ -122,17 +134,7 @@ def work_seconds(record):
             detail["lake.write_amp"] = final["bytes_written"] / final["batch_bytes"]
         detail["lake.space_amp"] = final["table_bytes"] / final["live_plain_bytes"]
         return work, detail
-    by_query = {}
-    for o in ops:
-        if o["sec"] is not None:
-            by_query.setdefault(o["query"], []).append(o["sec"])
-    names = [q["name"] for q in final["queries"]]
-    missing = [q for q in names if q not in by_query]
-    work = None if missing else sum(statistics.median(by_query[q]) for q in names)
-    detail = {"query.suite_s": work, "query.passes": min((len(v) for v in by_query.values()), default=0),
-              "query.missing": missing}
-    detail.update(_latency("query.call", ok_secs(ops)))
-    return work, detail
+    raise ValueError(f"unknown workload {name}")
 
 
 def summarize(record, traced):
@@ -148,8 +150,14 @@ def summarize(record, traced):
     if traced:
         layers = record["layers"]
         detail["spans_file"] = record.get("spans_file")
-        values = {n: layers.get(n, 0.0) for n, _, _ in PER_LAYER}
+        must = exercised(record["workload"])
+        missing = sorted(n for n in must if n not in layers)
+        if missing:
+            detail["layers_not_listed"] = layers
+            raise ValueError(f"traced run did not measure {missing}; detail: {detail}")
+        values = {n: layers[n] if n in must else 0.0 for n, _, _ in PER_LAYER}
         units = {n: u for n, u, _ in PER_LAYER}
+        detail["layers_not_exercised"] = sorted(n for n in values if n not in must)
         detail["layers_not_listed"] = {k: v for k, v in layers.items() if k not in values}
     else:
         secs = ok_secs(ops)

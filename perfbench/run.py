@@ -28,16 +28,11 @@ sys.dont_write_bytecode = True  # leave nothing behind in the checkout
 
 import gen_ffi  # noqa: E402
 import gen_lake  # noqa: E402
-import gen_tables  # noqa: E402
+import gen_orders  # noqa: E402
 import metrics  # noqa: E402
-import oracle  # noqa: E402
 
-WORKLOADS = ("ffi_export", "lake_dml", "query_suite")
 BUILD_TIMEOUT_S = 700  # with RUN_TIMEOUT_S, a first run ends within 900 s
 RUN_TIMEOUT_S = 170
-# The engine's own JVM options pin an 8 GB heap; the benchmark caps it at 4 GB
-# to stay small on a shared machine (later options win).
-HEAP = "4g"
 
 
 def log(msg):
@@ -45,8 +40,9 @@ def log(msg):
 
 
 def source_key(root):
-    """Fingerprint of everything the build compiles."""
-    h = hashlib.sha256()
+    """Fingerprint of everything the build compiles, and of SPARK_DRIVER_MEM,
+    which the engine's build turns into the JVM heap options."""
+    h = hashlib.sha256(os.environ.get("SPARK_DRIVER_MEM", "").encode())
     for top in ("build.sbt", "project/build.properties", "src/main",
                 "perfbench/build.sbt", "perfbench/project/build.properties", "perfbench/src/main"):
         path = os.path.join(root, top)
@@ -105,18 +101,17 @@ def generate(workload, seed, inputs):
     if workload == "ffi_export":
         gen_ffi.generate(inputs, seed, **gen_ffi.BATCH)
         gen_ffi.generate(os.path.join(inputs, "warmup"), seed + 1_000_003, **gen_ffi.WARMUP)
-    elif workload == "lake_dml":
-        gen_tables.write(inputs, seed, metrics.LAKE_SF, names={"orders"})
+    else:
+        gen_orders.write(inputs, seed, metrics.LAKE_SF)
         gen_lake.generate(os.path.join(inputs, "lake_ops.json"), seed,
                           max_key=int(1_500_000 * metrics.LAKE_SF) - 1)
-    else:
-        gen_tables.write(os.path.join(inputs, "tables"), seed, metrics.QUERY_SF)
-        shutil.copy(os.path.join(HERE, "queries.txt"), os.path.join(inputs, "queries.txt"))
 
 
 def main(argv):
+    # SIGTERM unwinds like an exception, so run_child kills the child's group
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=metrics.DRIVEN)
     ap.add_argument("--seed", required=True, type=int)
     ap.add_argument("--seconds", required=True, type=float)
     ap.add_argument("--trace", required=True, choices=("0", "1"))
@@ -138,7 +133,8 @@ def main(argv):
     generate(args.workload, args.seed, inputs)
     generated = time.monotonic()
     record_file = os.path.join(run_dir, "record.json")
-    cmd = (["java"] + jvm_opts + [f"-Xmx{HEAP}", f"-Xms{HEAP}", "-XX:-UsePerfData",
+    # jvm_opts are the engine's own (heap, GC, module opens), unchanged
+    cmd = (["java"] + jvm_opts + ["-XX:-UsePerfData",
                                   f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
                                   f"-Dderby.system.home={work}",
                                   f"-Dderby.stream.error.file={os.path.join(work, 'derby.log')}",
@@ -154,8 +150,6 @@ def main(argv):
     jvm_done = time.monotonic()
     with open(record_file) as f:
         record = json.load(f)
-    if args.workload == "query_suite":
-        oracle.apply(record, os.path.join(inputs, "tables"), os.path.join(work, "results"))
     try:
         result, detail = metrics.summarize(record, traced=args.trace == "1")
     except ValueError as e:

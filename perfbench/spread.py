@@ -3,7 +3,7 @@
 median and the inter-quartile range as a share of the median (the
 benchmark's steadiness check), plus each run's wall time.
 
-    python3 perfbench/spread.py --workload lake_dml --seeds 1-10 [--seconds 5] [--trace 0]
+    python3 perfbench/spread.py --workload lake_dml --seeds 1-10 [--seconds 10] [--trace 0]
 """
 
 import argparse
@@ -18,7 +18,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="first-last")
-    ap.add_argument("--seconds", default="15")
+    ap.add_argument("--seconds", default="10")
     ap.add_argument("--trace", default="0")
     args = ap.parse_args()
     first, last = (int(x) for x in args.seeds.split("-"))

@@ -6,12 +6,12 @@ import java.sql.{Connection, DriverManager}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import graft.etl.{Archive, FfiCatalog, FfiExtract, FfiIdents, FfiPipeline, FfiTransform, Mapping}
+import graft.etl.{FfiPipeline, Mapping}
 import graft.sinks.{JdbcConstraints, MergeJdbc}
 import org.apache.spark.sql.SparkSession
 
 /** Ground truth of one export, as the generator wrote it. */
-final case class ExportSpec(file: String, bytes: Long, rows: Long,
+final case class ExportSpec(file: String, size: String, bytes: Long, rows: Long,
     expected: Map[String, (Long, String)])
 
 /** A generated FFI batch: DDL, mapping, and the exports in load order. */
@@ -33,7 +33,7 @@ object FfiBatch {
       j.get("tables").elements().asScala.map(t => t.get(0).asText -> strs(t.get(1))).toSeq,
       mapping,
       j.get("exports").elements().asScala.map { e =>
-        ExportSpec(e.get("file").asText, e.get("bytes").asLong, e.get("rows").asLong,
+        ExportSpec(e.get("file").asText, e.get("size").asText, e.get("bytes").asLong, e.get("rows").asLong,
           e.get("expected").fields().asScala.map { t =>
             t.getKey -> (t.getValue.get("rows").asLong, t.getValue.get("checksum").asText)
           }.toMap)
@@ -84,7 +84,6 @@ final class FfiExport(input: Path, work: Path) extends Workload {
   private val batch = FfiBatch.load(input)
   private val warmup = FfiBatch.load(input.resolve("warmup"))
   private var dbSeq = 0
-  private val batchSec = mutable.ArrayBuffer.empty[Double]
 
   private def freshDb(b: FfiBatch): (String, JdbcConstraints) = {
     dbSeq += 1
@@ -102,7 +101,7 @@ final class FfiExport(input: Path, work: Path) extends Workload {
     catch { case _: java.sql.SQLException => () } // Derby reports a drop as an exception
 
   /** Each batch gets its own copy of the exports: a clean load archives them. */
-  private def stage(b: FfiBatch, from: Path, tag: String): Path = {
+  private def copyExports(b: FfiBatch, from: Path, tag: String): Path = {
     val dir = work.resolve(s"ffi_$tag")
     Files.createDirectories(dir)
     b.exports.foreach(e =>
@@ -112,7 +111,7 @@ final class FfiExport(input: Path, work: Path) extends Workload {
 
   override def setup(spark: SparkSession): Unit = {
     val (url, cons) = freshDb(warmup)
-    val dir = stage(warmup, input.resolve("warmup"), "warmup")
+    val dir = copyExports(warmup, input.resolve("warmup"), "warmup")
     warmup.exports.foreach { e =>
       val r = FfiPipeline.runFile(spark, dir.resolve(e.file), warmup.mapping, cons, url, MergeJdbc.Derby)
       require(r.failedTables.isEmpty, s"warm-up export failed: ${r.tables}")
@@ -120,42 +119,18 @@ final class FfiExport(input: Path, work: Path) extends Workload {
     dropDb(url)
   }
 
-  /** The traced run calls the pipeline's stages itself, in `runFile`'s
-    * order, so each gets its own span; the untraced run calls `runFile`.
-    * The load span also executes the lazy extract and transform plans.
-    */
-  private def tracedRunFile(spark: SparkSession, tracer: Tracer, file: Path,
-      cons: JdbcConstraints, url: String): FfiPipeline.FileResult = {
-    val cat = tracer.span("etl.extract")(FfiExtract.extract(spark, file.toString))
-    val frames = tracer.span("etl.transform") {
-      val out = FfiTransform(FfiIdents(cat))
-      val reflected = cons.primaryKeys.keys.toSeq
-      (for {
-        (ffiTable, outTable) <- batch.mapping.tableMap.toSeq
-        if !FfiCatalog.Excluded(ffiTable)
-        df <- out.get(ffiTable)
-        sinkName <- reflected.find(_.equalsIgnoreCase(outTable))
-      } yield sinkName -> batch.mapping.project(outTable, df)).toMap
-    }
-    val results = tracer.span("sinks.load")(MergeJdbc.loadAll(frames, cons, url, MergeJdbc.Derby))
-    FfiPipeline.FileResult(file, results,
-      Archive.archiveIfClean(file, results.filter(_.failed).map(_.table)))
-  }
-
   private val loadResults = mutable.ArrayBuffer.empty[MergeJdbc.TableResult]
 
   override def measure(spark: SparkSession, ops: Ops, tracer: Tracer, deadlineNs: Long): Unit =
     do {
       val (url, cons) = freshDb(batch)
-      val dir = stage(batch, input, s"batch_$dbSeq")
+      val dir = copyExports(batch, input, s"batch_$dbSeq")
       val conn = DriverManager.getConnection(url)
-      var sec = 0.0
-      var whole = true
       batch.exports.foreach { e =>
         val file = dir.resolve(e.file)
-        val res = ops.run("export", Map("file" -> e.file, "bytes" -> e.bytes, "rows" -> e.rows)) {
-          if (tracer.enabled) tracedRunFile(spark, tracer, file, cons, url)
-          else FfiPipeline.runFile(spark, file, batch.mapping, cons, url, MergeJdbc.Derby)
+        val res = ops.run("export", Map("batch" -> dbSeq, "file" -> e.file, "size" -> e.size,
+            "bytes" -> e.bytes, "rows" -> e.rows)) {
+          FfiPipeline.runFile(spark, file, batch.mapping, cons, url, MergeJdbc.Derby)
         } { r =>
           if (r.failedTables.nonEmpty) Some(s"tables failed: ${r.tables.filter(_.failed)}")
           else if (r.archived.isEmpty) Some("export not archived")
@@ -163,31 +138,69 @@ final class FfiExport(input: Path, work: Path) extends Workload {
             batch.tables.map { case (t, cols) => t -> FfiCheck.tableState(conn, t, cols) }.toMap,
             e.expected)
         }
-        res match {
-          case Some(r) =>
-            sec += ops.done.last.sec.get
-            if (tracer.enabled) loadResults ++= r.tables
-          case None => whole = false
-        }
+        if (tracer.enabled) res.foreach(loadResults ++= _.tables)
       }
       conn.close()
       dropDb(url)
-      if (whole) batchSec += sec
     } while (System.nanoTime() < deadlineNs)
 
-  override def finish(spark: SparkSession): Map[String, Any] = Map("batch_s" -> batchSec.toSeq)
+  override def finish(spark: SparkSession): Map[String, Any] = Map.empty
 
-  override def layers(probe: Probe, tracer: Tracer, ops: Ops): Map[String, Double] = {
-    def named(n: String) = tracer.spans.filter(_.name == n).flatMap(s => tracer.subtree(s)).toSet
-    val ex = probe.work(named("etl.extract"))
-    val tr = probe.work(named("etl.transform"))
-    val ld = probe.work(named("sinks.load"))
-    val n = math.max(1, tracer.spans.count(_.name == "etl.extract")).toDouble
-    Map(
-      "etl.extract_s" -> ex.sec / n, "etl.extract_jobs" -> ex.jobs / n,
-      "etl.transform_s" -> tr.sec / n, "etl.transform_jobs" -> tr.jobs / n,
-      "sinks.load_s" -> ld.sec / n, "sinks.load_jobs" -> ld.jobs / n,
+  /** Per-export stage times from one `runFile` call, without spans inside
+    * it: the pipeline runs its stages in order, so each stage starts with
+    * the first job its module submits (the job's call site, see
+    * [[Probe.site]]). Extract runs from the call's start to the first
+    * transform job, transform from there to the first sinks job, and the
+    * load from there to the call's end; a stage's jobs are those that
+    * start inside its window. The load window also runs the lazy extract
+    * and transform plans the MERGE statements read.
+    */
+  override def layers(probe: Probe, tracer: Tracer, tracedOps: Ops): Map[String, Double] = {
+    val exports = tracer.spans.filter(s => s.parent < 0 && s.name == "export")
+    val sums = mutable.Map.empty[String, Double].withDefaultValue(0.0)
+    val bySize = mutable.Map.empty[String, Double].withDefaultValue(0.0) // detail line only
+    exports.foreach { s =>
+      val size = tracedOps.done(s.opId).info("size")
+      val js = probe.jobsBetween(s.startMs, s.endMs + 1)
+      def firstOf(stage: String) = js.find(j => FfiExport.stageOf(j.site) == stage).map(_.startMs)
+      val loadAt = firstOf("load").getOrElse(s.endMs)
+      val transformAt = math.min(firstOf("transform").getOrElse(loadAt), loadAt)
+      for ((name, from, to) <- Seq(("extract", s.startMs, transformAt),
+          ("transform", transformAt, loadAt), ("load", loadAt, s.endMs + 1))) {
+        val sec = math.max(0L, math.min(to, s.endMs) - from) / 1e3
+        sums(s"${name}_s") += sec
+        bySize(s"ffi.$size.${name}_s") += sec
+        sums(s"${name}_jobs") += js.count(j => j.startMs >= from && j.startMs < to)
+        if (firstOf(name).isDefined) sums(s"${name}_seen") += 1
+      }
+      bySize(s"ffi.$size.exports") += 1
+      js.foreach(j => sums(s"jobs_by_site.${FfiExport.stageOf(j.site)}") += 1)
+    }
+    val n = math.max(1, exports.size).toDouble
+    // a stage none of whose jobs was seen in some export is left out, so
+    // the traced run fails rather than reporting an unmeasured stage
+    def stageMetrics(layer: String, name: String): Map[String, Double] =
+      if (exports.isEmpty || sums(s"${name}_seen") < exports.size) Map.empty
+      else Map(s"$layer.${name}_s" -> sums(s"${name}_s") / n, s"$layer.${name}_jobs" -> sums(s"${name}_jobs") / n)
+    stageMetrics("etl", "extract") ++ stageMetrics("etl", "transform") ++
+      stageMetrics("sinks", "load") ++ Map(
       "sinks.rows_merged" -> loadResults.map(_.inserted).sum.toDouble,
-      "sinks.tables_failed" -> loadResults.count(_.failed).toDouble)
+      "sinks.tables_failed" -> loadResults.count(_.failed).toDouble) ++
+      sums.collect { case (k, v) if k.startsWith("jobs_by_site.") => s"ffi.$k" -> v / n } ++
+      bySize.collect { case (k, v) if !k.endsWith(".exports") =>
+        k -> v / bySize(k.substring(0, k.lastIndexOf('.')) + ".exports")
+      }
   }
+}
+
+object FfiExport {
+
+  /** The pipeline stage an engine call site belongs to; "unnamed" when the
+    * job's call site holds no engine frame.
+    */
+  def stageOf(site: String): String =
+    if (site == "graft.etl.FfiExtract") "extract"
+    else if (site.startsWith("graft.sinks.")) "load"
+    else if (site.startsWith("graft.etl.")) "transform"
+    else "unnamed"
 }

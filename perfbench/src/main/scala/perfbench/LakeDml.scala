@@ -56,7 +56,7 @@ final class LakeDml(input: Path, work: Path) extends Workload {
   private var bytesWritten = 0L
   private var batchBytes = 0L
   private val commitIo = mutable.ArrayBuffer.empty[(Long, Long)] // traced: bytes, files per commit
-  private val readShape = mutable.ArrayBuffer.empty[(Int, Long)] // traced: snapshot dirs, files
+  private val readShape = mutable.ArrayBuffer.empty[ReadShape] // traced: one per read
 
   private def listFiles(): Map[String, (Long, Long)] =
     Files.walk(tableDir).iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
@@ -73,15 +73,38 @@ final class LakeDml(input: Path, work: Path) extends Workload {
     (fresh.values.map(_._1).sum, fresh.size.toLong)
   }
 
-  private def snapshotFiles(spark: SparkSession): (Int, Long) = {
+  /** Parquet files per directory of the current snapshot. */
+  private def snapshotFiles(spark: SparkSession): Map[String, Long] = {
     val v = VersionedLake.currentVersion(spark, tableDir.toString).get
-    val dirs = VersionedLake.manifest(spark, tableDir.toString, v)
-    val n = dirs.map { d =>
+    VersionedLake.manifest(spark, tableDir.toString, v).map { d =>
       val p = tableDir.resolve("data").resolve(d)
-      if (!Files.isDirectory(p)) 0L
-      else Files.walk(p).iterator().asScala.count(_.toString.endsWith(".parquet")).toLong
-    }.sum
-    (dirs.size, n)
+      d -> (if (!Files.isDirectory(p)) 0L
+        else Files.walk(p).iterator().asScala.count(_.toString.endsWith(".parquet")).toLong)
+    }.toMap
+  }
+
+  /** A traced read: runs it, then asks the lake's scan builder which
+    * directories it kept (its `lastKept` observability hook, set on the
+    * planning thread, which is this one). Files read are the parquet files
+    * of the kept directories; none when the answer came from the manifest
+    * (`lastMetaAgg`); the whole snapshot when the read did not plan through
+    * the pruning builder (a read-through of pending deletes reads every
+    * directory).
+    */
+  private def tracedRead(spark: SparkSession, ops: Ops, kind: String, lo: Long, hi: Long,
+      where: String): Boolean = {
+    val snap = snapshotFiles(spark)
+    val hook = org.apache.spark.sql.graft.LakePruningScanBuilder
+    hook.lastKept.remove()
+    hook.lastMetaAgg.remove()
+    val ok = ops.run(kind)(readTable(spark, where))(model.compare(_, model.range(lo, hi))).isDefined
+    val (how, read) = Option(hook.lastKept.get) match {
+      case Some(kept) => ("pruned", kept.map(snap.getOrElse(_, 0L)).sum)
+      case None if hook.lastMetaAgg.get != null => ("manifest", 0L)
+      case None => ("unpruned", snap.values.sum)
+    }
+    readShape += ReadShape(snap.size, snap.values.sum, read, how)
+    ok
   }
 
   private def batchRows(op: JsonNode): Seq[(Long, Long, String, Double)] =
@@ -129,15 +152,11 @@ final class LakeDml(input: Path, work: Path) extends Workload {
       case "optimize" =>
         ops.run(kind)(spark.sql("CALL graftcat.system.optimize('orders_t')").collect())(_ => None)
           .isDefined
-      case "point" =>
-        val k = op.get("key").asLong
-        if (tracer.enabled) readShape += snapshotFiles(spark)
-        ops.run(kind)(readTable(spark, s"o_orderkey = $k"))(model.compare(_, model.range(k, k)))
-          .isDefined
-      case "range" =>
-        if (tracer.enabled) readShape += snapshotFiles(spark)
-        ops.run(kind)(readTable(spark, s"o_orderkey BETWEEN $lo AND $hi"))(
-          model.compare(_, model.range(lo, hi))).isDefined
+      case "point" | "range" =>
+        val (a, b) = if (kind == "point") (op.get("key").asLong, op.get("key").asLong) else (lo, hi)
+        val where = if (kind == "point") s"o_orderkey = $a" else s"o_orderkey BETWEEN $a AND $b"
+        if (tracer.enabled) tracedRead(spark, ops, kind, a, b, where)
+        else ops.run(kind)(readTable(spark, where))(model.compare(_, model.range(a, b))).isDefined
     }
     if (Set("merge", "insert", "update", "delete", "optimize")(kind)) {
       val (b, f) = written()
@@ -158,7 +177,8 @@ final class LakeDml(input: Path, work: Path) extends Workload {
     val third = maxKey / 3
     for ((a, b) <- Seq((-1L, third), (third, 2 * third), (2 * third, maxKey)))
       VersionedLake.appendCommit(orders.filter(col("o_orderkey") > a && col("o_orderkey") <= b),
-        tableDir.toString, statsCols = Seq("o_orderkey"))
+        tableDir.toString, statsCols = Seq("o_orderkey"),
+        bloom = Some(VersionedLake.BloomConfig(Seq("o_orderkey"))))
     model = new LakeModel
     model.upsert(orders.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))))
     val warm = new Ops(new Tracer(false))
@@ -191,28 +211,40 @@ final class LakeDml(input: Path, work: Path) extends Workload {
       "table_bytes" -> du(tableDir), "live_plain_bytes" -> du(plain))
   }
 
+  /** Per-commit and per-read lake figures of the traced half. A figure
+    * with nothing behind it (no commit, no read, a phase no job ran) is
+    * left out, so the traced run fails instead of reporting a zero.
+    */
   override def layers(probe: Probe, tracer: Tracer, ops: Ops): Map[String, Double] = {
     val commitKinds = Set("merge", "insert", "update", "delete", "optimize")
-    def spansOf(kinds: String => Boolean) = tracer.spans
-      .filter(s => s.parent < 0 && kinds(s.name)).flatMap(s => tracer.subtree(s)).toSet
-    val commits = probe.work(spansOf(commitKinds))
-    val reads = probe.work(spansOf(Set("point", "range")))
-    val nCommits = math.max(1, ops.done.count(o => commitKinds(o.kind))).toDouble
-    val nReads = math.max(1, ops.done.count(o => !commitKinds(o.kind))).toDouble
-    val phases = commits.jobSecByDesc.groupBy { case (desc, _) => LakeDml.phase(desc) }
-      .map { case (p, g) => s"sources.phase_s.$p" -> g.values.sum / nCommits }
-    val snapDirs = readShape.map(_._1.toDouble)
-    val snapFiles = readShape.map(_._2.toDouble).sum
-    phases ++ Map(
-      "sources.commit_jobs" -> commits.jobs / nCommits,
-      "sources.commit_driver_s" -> commits.driverSec / nCommits,
-      "sources.bytes_written" -> commitIo.map(_._1).sum / nCommits,
-      "sources.files_added" -> commitIo.map(_._2).sum / nCommits,
-      "sources.snapshot_dirs" -> (if (snapDirs.isEmpty) 0.0 else snapDirs.sum / snapDirs.size),
-      "sources.files_read" -> reads.filesRead / nReads,
-      "sources.prune_ratio" -> (if (snapFiles == 0) 0.0 else 1.0 - reads.filesRead / snapFiles))
+    val commitSpans = tracer.spans.filter(s => s.parent < 0 && commitKinds(s.name))
+    val commits = probe.work(commitSpans.flatMap(s => tracer.subtree(s)).toSet)
+    val nCommits = commitSpans.size.toDouble
+    val commitFigures = if (commitSpans.isEmpty) Map.empty[String, Double] else {
+      commits.jobSecByDesc.groupBy { case (desc, _) => LakeDml.phase(desc) }
+        .map { case (p, g) => s"sources.phase_s.$p" -> g.values.sum / nCommits } ++ Map(
+        "sources.commit_jobs" -> commits.jobs / nCommits,
+        "sources.commit_driver_s" -> commits.driverSec / nCommits,
+        "sources.bytes_written" -> commitIo.map(_._1).sum / nCommits,
+        "sources.files_added" -> commitIo.map(_._2).sum / nCommits)
+    }
+    val nRead = readShape.size.toDouble
+    val snapFiles = readShape.map(_.snapshotFiles).sum.toDouble
+    val filesRead = readShape.map(_.filesRead).sum.toDouble
+    val readFigures = if (readShape.isEmpty) Map.empty[String, Double] else Map(
+      "sources.snapshot_dirs" -> readShape.map(_.snapshotDirs).sum / nRead,
+      "sources.files_read" -> filesRead / nRead,
+      "sources.prune_ratio" -> (1.0 - filesRead / snapFiles)) ++
+      // how the traced reads planned (see `tracedRead`); detail line only
+      readShape.groupBy(_.how).map { case (h, g) => s"sources.reads_$h" -> g.size.toDouble }
+    commitFigures ++ readFigures
   }
 }
+
+/** One traced read: the snapshot's directories and parquet files, the files
+  * the scan read, and how it planned ("pruned", "manifest", "unpruned").
+  */
+final case class ReadShape(snapshotDirs: Int, snapshotFiles: Long, filesRead: Long, how: String)
 
 object LakeDml {
 

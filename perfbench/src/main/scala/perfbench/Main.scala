@@ -54,7 +54,6 @@ object Main {
     val workload: Workload = name match {
       case "ffi_export" => new FfiExport(input, work)
       case "lake_dml" => new LakeDml(input, work)
-      case "query_suite" => new QuerySuite(input, work)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
     val record = mutable.LinkedHashMap[String, Any]("workload" -> name, "cores" -> Cores)
@@ -83,7 +82,8 @@ object Main {
       workload.measure(spark, tracedOps, tracer, System.nanoTime() + half)
       System.gc() // at least one post-GC heap reading per traced run
       probe.stop()
-      val (compileMs, maxMethod) = probe.codegenStats
+      val compileMs = probe.codegenCompileMs
+      val maxMethod = probe.codegenMaxMethodBytes
       val (ruleMs, ruleEffective) = probe.graftRules
       val untracedSec = ops.done.flatMap(_.sec).sum / math.max(1, ops.done.count(_.sec.isDefined))
       val tracedSec = tracedOps.done.flatMap(_.sec).sum / math.max(1, tracedOps.done.count(_.sec.isDefined))
@@ -94,9 +94,9 @@ object Main {
         "plans.planning_ms" -> opWork.planningMs / perOp,
         "engine.session_start_s" -> sessionSec,
         "engine.heap_after_gc_peak_mb" -> probe.heapAfterGcPeakBytes / 1048576.0,
-        "functions.codegen_compile_ms" -> compileMs,
+        "functions.codegen_compile_ms" -> compileMs / perOp,
         "functions.codegen_max_method_bytes" -> maxMethod.toDouble,
-        "plans.graft_rule_ms" -> ruleMs,
+        "plans.graft_rule_ms" -> ruleMs / perOp,
         "plans.graft_rule_effective" -> ruleEffective,
         "trace.overhead_s" -> (tracedSec - untracedSec))
       record("traced_ops") = tracedOps.done.map(opJson).toSeq

@@ -2,24 +2,27 @@ package perfbench
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Counts from Spark's public listener and metrics hooks, for the traced
-  * run only. No span or counter sits inside the engine: jobs, stages, tasks,
-  * planning phases and scanned files are attributed to the benchmark's own
-  * spans by wall-clock time (one client thread, so spans nest).
+  * run only. No span or counter sits inside the engine: jobs, stages, tasks
+  * and planning phases are attributed to the benchmark's own spans by
+  * wall-clock time (one client thread, so spans nest), and each job carries
+  * the engine module that submitted it, from its stages' call sites.
   */
 final class Probe(spark: SparkSession, tracer: Tracer) {
 
-  final case class Job(startMs: Long, desc: String, stageIds: Seq[Int]) {
+  /** `site` is the engine class whose code submitted the job (see [[Probe.site]]). */
+  final case class Job(startMs: Long, desc: String, stageIds: Seq[Int], site: String) {
     @volatile var endMs: Long = -1L
   }
   final class StageAgg {
@@ -29,17 +32,21 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
     var shuffleBytes = 0L
     var spillBytes = 0L
   }
-  final case class Qe(startMs: Long, planningMs: Long, filesRead: Long)
+  final case class Qe(startMs: Long, planningMs: Long)
 
   private val jobs = new ConcurrentHashMap[Int, Job]()
   private val stages = new ConcurrentHashMap[Int, StageAgg]()
   private val qes = new ConcurrentLinkedQueue[Qe]()
+  private val generated = ConcurrentHashMap.newKeySet[CodeAndComment]() // distinct by body
 
   private val listener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val desc = Option(e.properties)
         .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-      jobs.put(e.jobId, Job(e.time, desc, e.stageIds))
+      // the final stage first: its call site is the job's own submission
+      val site = e.stageInfos.sortBy(-_.stageId).iterator.map(st => Probe.site(st.details))
+        .find(_.nonEmpty).getOrElse("")
+      jobs.put(e.jobId, Job(e.time, desc, e.stageIds, site))
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       Option(jobs.get(e.jobId)).foreach(_.endMs = e.time)
@@ -63,8 +70,8 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
         qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
       val phases = qe.tracker.phases.values
       if (phases.nonEmpty)
-        qes.add(Qe(phases.map(_.startTimeMs).min,
-          phases.map(p => p.endTimeMs - p.startTimeMs).sum, filesRead(qe.executedPlan)))
+        qes.add(Qe(phases.map(_.startTimeMs).min, phases.map(p => p.endTimeMs - p.startTimeMs).sum))
+      generated.addAll(Probe.wholeStageCode(qe.executedPlan).asJava)
     }
     override def onFailure(funcName: String,
         qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
@@ -83,16 +90,14 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
   private val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
     .collect { case e: javax.management.NotificationEmitter => e }
 
-  private def codegen = org.apache.spark.metrics.source.CodegenMetrics
-  private var codegenStart = (0L, 0.0)
+  private var compileNsAtStart = 0L
 
   def start(): Unit = {
     spark.sparkContext.addSparkListener(listener)
     spark.listenerManager.register(qeListener)
     gcBeans.foreach(_.addNotificationListener(gcListener, null, null))
     org.apache.spark.sql.catalyst.rules.RuleExecutor.resetMetrics()
-    val h = codegen.METRIC_COMPILATION_TIME
-    codegenStart = (h.getCount, h.getSnapshot.getMean * h.getCount)
+    compileNsAtStart = CodeGenerator.compileTime
   }
 
   def stop(): Unit = {
@@ -112,26 +117,22 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
         .foreach(_.invoke(bus))
     } catch { case _: Throwable => Thread.sleep(200) }
 
-  /** Files the physical plan's scans read: v1 file scans report it as a
-    * metric, v2 file scans as the files in their planned partitions.
+  /** Milliseconds the code generator spent compiling since `start`, from its
+    * JVM-wide running total (`CodeGenerator.compileTime`): summed over every
+    * thread that compiles, so tasks compiling in parallel can make it exceed
+    * wall time. The client is the only thread running queries.
     */
-  private def filesRead(plan: SparkPlan): Long = plan match {
-    case a: AdaptiveSparkPlanExec => filesRead(a.executedPlan)
-    case q: QueryStageExec => filesRead(q.plan)
-    case f: FileSourceScanExec => f.metrics.get("numFiles").fold(0L)(_.value)
-    case b: BatchScanExec =>
-      b.inputPartitions.collect { case fp: FilePartition => fp.files.length.toLong }.sum
-    case p => (p.children ++ p.subqueries).map(filesRead).sum
-  }
+  def codegenCompileMs: Double = (CodeGenerator.compileTime - compileNsAtStart) / 1e6
 
-  /** Compilation ms and largest generated method (bytes) since `start`.
-    * The compile-time total is the histogram's mean times its count delta.
+  /** Largest generated method (bytecode bytes) of the whole-stage codegen
+    * stages of every query that ran while the probe was on, as EXPLAIN
+    * CODEGEN computes it: the stage's code is looked up in the compiled-class
+    * cache, and compiled again if it was evicted. Call after `stop` and after
+    * reading `codegenCompileMs`, which such a compile would grow.
     */
-  def codegenStats: (Double, Long) = {
-    val h = codegen.METRIC_COMPILATION_TIME
-    val total = h.getSnapshot.getMean * h.getCount - codegenStart._2
-    (math.max(0.0, total), codegen.METRIC_GENERATED_METHOD_BYTECODE_SIZE.getSnapshot.getMax)
-  }
+  def codegenMaxMethodBytes: Long =
+    generated.asScala.flatMap(c => Try(CodeGenerator.compile(c)._2.maxMethodCodeSize).toOption)
+      .foldLeft(0L)((m, b) => math.max(m, b.toLong))
 
   /** Time (ms) and effective-run ratio of the engine's own Catalyst rules
     * (classes under `graft.`), from the rule executor's metering.
@@ -151,7 +152,7 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
     */
   final case class Work(sec: Double, jobs: Int, stages: Int, tasks: Long, jobBusySec: Double,
       taskSec: Double, gcMs: Long, shuffleMb: Double, spillMb: Double, planningMs: Long,
-      filesRead: Long, jobSecByDesc: Map[String, Double]) {
+      jobSecByDesc: Map[String, Double]) {
     def driverSec: Double = math.max(0.0, sec - jobBusySec)
   }
 
@@ -170,7 +171,13 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
     Work(topLevel.map(_.sec).sum, js.size, js.map(_.stageIds.size).sum, st.map(_.tasks).sum,
       busy, st.map(_.runMs).sum / 1e3, st.map(_.gcMs).sum,
       st.map(_.shuffleBytes).sum / 1048576.0, st.map(_.spillBytes).sum / 1048576.0,
-      q.map(_.planningMs).sum, q.map(_.filesRead).sum, byDesc)
+      q.map(_.planningMs).sum, byDesc)
+  }
+
+  /** Jobs that started at or after `fromMs` and before `toMs`, by start time. */
+  def jobsBetween(fromMs: Long, toMs: Long): Seq[Job] = {
+    drain()
+    jobs.values.asScala.toSeq.filter(j => j.startMs >= fromMs && j.startMs < toMs).sortBy(_.startMs)
   }
 
   private def unionMs(iv: Seq[(Long, Long)]): Long = {
@@ -186,4 +193,34 @@ final class Probe(spark: SparkSession, tracer: Tracer) {
     if (curE > curS) total += curE - curS
     total
   }
+}
+
+object Probe {
+
+  /** The generated code of a plan's whole-stage codegen stages, generated
+    * again from the executed plan.
+    */
+  def wholeStageCode(plan: SparkPlan): Seq[CodeAndComment] = {
+    val stages = mutable.ArrayBuffer.empty[WholeStageCodegenExec]
+    def walk(p: SparkPlan): Unit = p.foreach {
+      case w: WholeStageCodegenExec => stages += w
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case other => other.subqueries.foreach(walk)
+    }
+    walk(plan)
+    stages.flatMap(w => Try(w.doCodeGen()._2).toOption).toSeq
+  }
+
+  /** The engine class (under `graft.`) nearest the job submission in a
+    * stage's call-site stack, such as `graft.etl.FfiExtract`, or "" when no
+    * engine frame is on it (a job submitted from a pool thread).
+    */
+  def site(details: String): String =
+    details.linesIterator.map { line =>
+      val method = line.trim.takeWhile(_ != '(') // [loader/module/]class.method
+      method.substring(method.lastIndexOf('/') + 1)
+    }.find(_.startsWith("graft.")).fold("") { m =>
+      m.substring(0, m.lastIndexOf('.')).takeWhile(_ != '$')
+    }
 }

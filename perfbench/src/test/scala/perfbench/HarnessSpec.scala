@@ -55,6 +55,22 @@ class HarnessSpec extends AnyFunSuite {
     assert(model.compare(got :+ Row(2L, 20L, "U", 1.25), expected).isDefined)
   }
 
+  test("a job's call site names the engine class and pipeline stage that submitted it") {
+    val details = Seq(
+      "org.apache.spark.sql.Dataset.collect(Dataset.scala:3550)",
+      "graft.etl.FfiTransform$.$anonfun$apply$3(FfiTransform.scala:88)",
+      "graft.etl.FfiPipeline$.outputFrames(FfiPipeline.scala:38)",
+      "perfbench.FfiExport.measure(FfiExport.scala:130)").mkString("\n")
+    assert(Probe.site(details) === "graft.etl.FfiTransform")
+    assert(Probe.site("app//graft.sinks.MergeJdbc$Loader.run(MergeJdbc.scala:1)") === "graft.sinks.MergeJdbc")
+    assert(Probe.site("java.lang.Thread.run(Thread.java:840)") === "")
+    assert(FfiExport.stageOf("graft.etl.FfiExtract") === "extract")
+    assert(FfiExport.stageOf("graft.etl.FfiTransform") === "transform")
+    assert(FfiExport.stageOf("graft.etl.FfiIdents") === "transform")
+    assert(FfiExport.stageOf("graft.sinks.MergeJdbc") === "load")
+    assert(FfiExport.stageOf("") === "unnamed")
+  }
+
   test("lake job descriptions map to commit phases") {
     assert(LakeDml.phase("upsert: key ranges") === "key_ranges")
     assert(LakeDml.phase("merge: dup probe") === "refusal_probes")

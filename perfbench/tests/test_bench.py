@@ -10,16 +10,13 @@ import sys
 import tempfile
 import unittest
 
-import duckdb
-
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.join(HERE, "..", "bench"))
 
 import gen_ffi  # noqa: E402
 import gen_lake  # noqa: E402
-import gen_tables  # noqa: E402
+import gen_orders  # noqa: E402
 import metrics  # noqa: E402
-import oracle  # noqa: E402
 
 
 def same_tree(a, b):
@@ -36,7 +33,7 @@ class Determinism(unittest.TestCase):
         with tempfile.TemporaryDirectory() as t:
             for run in ("a", "b"):
                 gen_ffi.generate(os.path.join(t, run, "ffi"), 5, **gen_ffi.BATCH)
-                gen_tables.write(os.path.join(t, run, "tables"), 5, 0.001)
+                gen_orders.write(os.path.join(t, run, "tables"), 5, 0.001)
                 gen_lake.generate(os.path.join(t, run, "lake_ops.json"), 5, max_key=1499)
             self.assertTrue(same_tree(os.path.join(t, "a"), os.path.join(t, "b")))
             gen_ffi.generate(os.path.join(t, "c", "ffi"), 6, **gen_ffi.BATCH)
@@ -55,16 +52,6 @@ class Determinism(unittest.TestCase):
 
 
 class Checkers(unittest.TestCase):
-    def test_query_oracle_check_fails_on_a_corrupted_expected_value(self):
-        with tempfile.TemporaryDirectory() as t:
-            con = duckdb.connect()
-            con.sql(f"COPY (SELECT 1 AS k, 2.5 AS v UNION ALL SELECT 2, 3.5) "
-                    f"TO '{t}/part-0.parquet' (FORMAT parquet)")
-            good = "SELECT 2 AS k, 3.5 AS v UNION ALL SELECT 1, 2.5"
-            self.assertIsNone(oracle.check(con, good, t))
-            self.assertIsNotNone(oracle.check(con, good.replace("3.5", "3.75"), t))
-            self.assertIsNotNone(oracle.check(con, "SELECT 1 AS k, 2.5 AS v", t))
-
     def test_failed_ops_are_counted_and_never_timed(self):
         ops = [{"kind": "merge", "sec": 1.0, "error": None},
                {"kind": "merge", "sec": None, "error": "boom"},
@@ -82,6 +69,19 @@ class Checkers(unittest.TestCase):
         self.assertFalse(result["correct"])
         self.assertEqual(detail["lake.commit_samples"], 6)  # 1 + five commit kinds
         self.assertAlmostEqual(result["metrics"]["ops_per_s"]["value"], 9 / 15.5)
+
+    def test_traced_run_fails_when_an_exercised_layer_is_not_measured(self):
+        ops = [{"kind": "export", "sec": 2.0, "error": None, "batch": 1, "bytes": 10, "rows": 5}]
+        layers = {n: 1.0 for n in metrics.exercised("ffi_export")}
+        record = {"workload": "ffi_export", "setup_s": 9.0, "ops": ops, "traced_ops": ops,
+                  "final": {}, "layers": layers}
+        result, detail = metrics.summarize(record, traced=True)
+        self.assertEqual(result["metrics"]["etl.extract_s"]["value"], 1.0)
+        self.assertEqual(result["metrics"]["sources.files_read"]["value"], 0.0)
+        self.assertIn("sources.files_read", detail["layers_not_exercised"])
+        del layers["etl.extract_s"]
+        with self.assertRaises(ValueError):
+            metrics.summarize(record, traced=True)
 
     def test_tail_needs_ten_samples_beyond_it(self):
         self.assertIsNone(metrics.tail(list(range(10))))
